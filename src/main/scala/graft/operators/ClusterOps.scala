@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.zipnum.{ZipNumFormat, ZipNumIndex, ZipNumReader, ZipNumWriter}
+import graft.sources.zipnum.ZipNumIndex.{ClusterIndex, Slice}
 
 /**
  * The three headline cluster pipelines (SURVEY §3.1–§3.3), Spark-first.
@@ -15,8 +17,8 @@ import graft.sources.zipnum.{ZipNumFormat, ZipNumIndex, ZipNumReader, ZipNumWrit
  *          (jobs/MergeClusters.java:68-152 had a map-side merge; here each
  *          output partition block-prunes its key range from every input,
  *          heap-merges, and streams cleanup state over the sorted run).
- * range  — [start, end) dump, blocks pruned via ALL.summary, k-way merged
- *          driver-side like cdx/CDXClusterRangeDumper.java:39-74.
+ * range  — [start, end) dump, blocks pruned via ALL.summary, read and
+ *          k-way merged on the driver like cdx/CDXClusterRangeDumper.java:39-74.
  */
 object ClusterOps {
 
@@ -79,14 +81,57 @@ object ClusterOps {
       overwrite = overwrite)
   }
 
-  /** Stream [start, end) of one or more clusters, globally sorted: each
-    * cluster's partition-ordered pruned scan is k-way merged driver-side —
-    * only the requested range ever leaves the executors. */
+  /** Stream [start, end) of one or more clusters, globally sorted in
+    * [[graft.util.KeyOrder]]. Runs on the driver and submits no Spark job:
+    * each cluster's summary is pruned to the range, its slices are read one
+    * at a time through [[ZipNumReader.readSlice]], and the per-cluster
+    * streams are k-way merged. At most one slice per cluster is open at
+    * once. Handles close when the iterator is exhausted; a caller that
+    * stops early must `close()` it. */
   def range(spark: SparkSession, start: Option[String], end: Option[String],
-            dirs: Seq[String]): Iterator[String] = {
-    val streams = dirs.map(d =>
-      ZipNumReader.lines(spark, d, start, end).toLocalIterator)
-    SortedMerge.mergeIterators(streams)
+            dirs: Seq[String]): RangeIterator = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    range(conf, start, end, dirs.map(ZipNumIndex.load(_, conf)))
+  }
+
+  /** [[range]] over already-loaded summaries. */
+  private[operators] def range(conf: Configuration, start: Option[String],
+                               end: Option[String],
+                               indexes: Seq[ClusterIndex]): RangeIterator = {
+    val streams = indexes.map(idx =>
+      sliceLines(conf, idx.slices(idx.prune(start, end)), start, end))
+    val closeAll = () => streams.foreach(_._2())
+    // the merge opens every cluster's first slice; close them all if one fails
+    try new RangeIterator(
+      SortedMerge.mergeIterators(streams.map(_._1))(graft.util.KeyOrder),
+      closeAll)
+    catch { case e: Throwable => closeAll(); throw e }
+  }
+
+  /** One cluster's slices in key order, each opened only when the previous
+    * one is exhausted, plus a closer for the slice open at the time. */
+  private def sliceLines(conf: Configuration, slices: Seq[Slice],
+                         start: Option[String], end: Option[String])
+      : (Iterator[String], () => Unit) = {
+    var closeOpen: () => Unit = () => ()
+    val lines = slices.iterator.flatMap { s =>
+      val (it, closer) = ZipNumReader.readSliceWithCloser(conf, s, start, end)
+      closeOpen = closer
+      it
+    }
+    (lines, () => closeOpen())
+  }
+
+  /** The lines [[range]] returns; `close()` releases the open shard
+    * handles and is idempotent. */
+  final class RangeIterator private[operators] (
+      merged: Iterator[String], closeAll: () => Unit)
+      extends Iterator[String] with java.io.Closeable {
+    private var closed = false
+    override def hasNext: Boolean = !closed && merged.hasNext
+    override def next(): String =
+      if (hasNext) merged.next() else Iterator.empty.next()
+    override def close(): Unit = { closed = true; closeAll() }
   }
 
   // ------------------------------------------------------------------ CLI
@@ -149,16 +194,18 @@ object ClusterOps {
       "usage: cluster-range <start|-> <end|-> <in...>")
     val start = Option(args(0)).filter(_ != "-")
     val end = Option(args(1)).filter(_ != "-")
-    val dirs = args.drop(2).toSeq
     val conf = spark.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
+    val indexes = args.drop(2).toSeq.map { d =>
       val idx = ZipNumIndex.load(d, conf)
       System.err.println(
         s"$d: ${idx.prune(start, end).size}/${idx.blocks.size} blocks in range")
+      idx
     }
     val out = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(System.out, "UTF-8"), 1 << 16)
-    range(spark, start, end, dirs).foreach { l => out.write(l); out.write('\n') }
+    val lines = range(conf, start, end, indexes)
+    try lines.foreach { l => out.write(l); out.write('\n') }
+    finally lines.close()
     out.flush()
   }
 

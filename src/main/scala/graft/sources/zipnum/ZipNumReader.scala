@@ -13,20 +13,24 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.sources.zipnum.ZipNumIndex.Slice
 
 /**
- * Distributed ZipNum cluster reader — the serving path (SURVEY §2 S5/Q1/Q2,
- * §3.3). Planning happens driver-side over `ALL.summary`; each task streams
- * one byte slice of a shard through a single open stream (gzip members are
- * concatenated, `GZIPInputStream` walks them natively), splits on LF only
- * (interior CR is data), and residual-trims to [start, end) — inclusive
+ * ZipNum cluster reader (SURVEY §2 S5/Q1/Q2, §3.3). Planning happens
+ * driver-side over `ALL.summary`; [[readSlice]] streams one byte slice of a
+ * shard through a single open stream (gzip members are concatenated,
+ * `GZIPInputStream` walks them natively), splits on LF only (interior CR is
+ * data), and residual-trims to [start, end). The RDDs here run it in one
+ * task per slice; [[graft.operators.ClusterOps.range]] (the `cluster-range`
+ * serving path) runs it on the driver, with no Spark job. Inclusive
  * start / exclusive end, the bound semantics of
  * /root/reference/src/main/java/org/archive/hadoop/cdx/ClusterRange.java:57-62
  * (StartBoundedStringIterator / BoundedStringIterator over raw lines).
  */
 object ZipNumReader {
 
-  /** Lines of `[start, end)` from one cluster. Partitions are in cluster key
-    * order and each partition is internally sorted, so
-    * `rdd.toLocalIterator` streams the range fully ordered. */
+  /** Lines of `[start, end)` from one cluster, one partition per slice.
+    * Partitions are in cluster key order and each is internally sorted.
+    * A driver-side consumer of a range should use
+    * [[graft.operators.ClusterOps.range]], which reads the same slices
+    * without submitting a job per partition. */
   def lines(spark: SparkSession, dir: String,
             start: Option[String] = None, end: Option[String] = None,
             maxSliceBytes: Long = ZipNumIndex.DefaultMaxSliceBytes): RDD[String] = {

@@ -7,6 +7,40 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Cdx
 import graft.operators.{Boundaries, BoundaryPartitioner, ClusterOps, SortedMerge}
 import graft.sources.zipnum.{ZipNumIndex, ZipNumReader}
+import graft.util.KeyOrder
+
+/** Local filesystem under a `countopen://` scheme that counts the input
+  * streams it has open and the opens of each file, so a test can see which
+  * shard handles a reader holds. */
+class CountingOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "countopen"
+  override def getUri: java.net.URI = java.net.URI.create("countopen:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    CountingOpenFs.opens.merge(f.toUri.getPath, 1,
+      (a: Integer, b: Integer) => Int.box(a + b))
+    CountingOpenFs.maxLive.accumulateAndGet(
+      CountingOpenFs.live.incrementAndGet(), math.max)
+    new org.apache.hadoop.fs.FSDataInputStream(in) {
+      private val closed = new java.util.concurrent.atomic.AtomicBoolean
+      override def close(): Unit = {
+        super.close()
+        if (closed.compareAndSet(false, true))
+          CountingOpenFs.live.decrementAndGet()
+      }
+    }
+  }
+}
+
+object CountingOpenFs {
+  val live = new java.util.concurrent.atomic.AtomicInteger
+  val maxLive = new java.util.concurrent.atomic.AtomicInteger
+  /** path -> number of opens */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+
+  def reset(): Unit = { live.set(0); maxLive.set(0); opens.clear() }
+}
 
 class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
 
@@ -153,6 +187,135 @@ class ClusterOpsSpec extends AnyFunSuite with SparkTestSession {
       Seq(da, db)).toSeq
     val expected = (a ++ b).filter(l => l >= "org,s1" && l < "org,s2").sorted
     assert(got == expected)
+  }
+
+  private def inRange(start: Option[String], end: Option[String])(l: String) =
+    start.forall(KeyOrder.gteq(l, _)) && end.forall(KeyOrder.lt(l, _))
+
+  /** Two multi-shard clusters with overlapping keys; returns (lines, dirs). */
+  private def twoClusters(name: String): (Seq[String], Seq[String]) = {
+    val a = mkLines(300, _ % 3)
+    val b = mkLines(200, i => i % 3 + 1)
+    val dirs = Seq(a, b).zipWithIndex.map { case (lines, j) =>
+      val d = tmp(s"$name$j") + "/c"
+      ClusterOps.build(spark, spark.sparkContext.parallelize(lines, 3), d,
+        IndexedSeq("org,s1", "org,s2"), linesPerBlock = 20)
+      d
+    }
+    (a ++ b, dirs)
+  }
+
+  /** Exact key, multi-block prefix, absent key, open-ended ranges. */
+  private val rangeCases: Seq[(Option[String], Option[String])] = Seq(
+    (Some("org,s1)/p/00007 "), Some("org,s1)/p/00007!")),
+    (Some("org,s2)"), Some("org,s2*")),
+    (Some("org,s1)/p/99999 "), Some("org,s1)/p/99999!")),
+    (Some("org,s1)/p/00150"), None),
+    (None, Some("org,s0)/p/00100")),
+    (None, None))
+
+  test("range runs on the driver: zero Spark jobs, output equals brute force") {
+    val (lines, dirs) = twoClusters("rj")
+    // one exact hit, a prefix over several 20-line blocks, an absent key
+    val sizes = rangeCases.map { case (s, e) => lines.count(inRange(s, e)) }
+    assert(sizes.take(3) == Seq(1, 167, 0) && sizes.drop(3).forall(_ > 0),
+      sizes)
+    org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      rangeCases.foreach { case (s, e) =>
+        val got = ClusterOps.range(spark, s, e, dirs).toSeq
+        assert(got == lines.filter(inRange(s, e)).sorted(KeyOrder), (s, e))
+      }
+      org.apache.spark.sql.graftshim.ListenerShim.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"range submitted ${jobs.get} Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("range merges clusters in KeyOrder (supplementary vs U+E000+ keys)") {
+    def cdx(k: String) =
+      s"$k 20120101000000 http://x.org/ text/html 200 DIGESTXX - - 10 0 f.warc.gz"
+    val smiley = "\uD83D\uDE00"
+    val a = Seq("a", "a\uE000", "a\uFFFD", s"a$smiley/1", "b").map(cdx)
+    val b = Seq(s"a$smiley", "a\uE001", "a\uFFFD/2", "c").map(cdx)
+    val dirs = Seq(a, b).zipWithIndex.map { case (lines, j) =>
+      val d = tmp(s"rk$j") + "/c"
+      ClusterOps.build(spark, spark.sparkContext.parallelize(lines, 1), d,
+        IndexedSeq.empty, linesPerBlock = 2)
+      d
+    }
+    Seq[(Option[String], Option[String])](
+      (None, None), (Some("a\uE000"), None), (Some("a\uE001"), Some("c")),
+      (Some(s"a$smiley"), None)).foreach { case (s, e) =>
+      val got = ClusterOps.range(spark, s, e, dirs).toSeq
+      assert(got == (a ++ b).filter(inRange(s, e)).sorted(KeyOrder), (s, e))
+    }
+  }
+
+  /** [[twoClusters]], plus its dirs under the `countopen://` scheme. */
+  private def countedClusters(name: String)
+      : (Seq[String], Seq[String], Seq[String]) = {
+    spark.sparkContext.hadoopConfiguration.setClass("fs.countopen.impl",
+      classOf[CountingOpenFs], classOf[org.apache.hadoop.fs.FileSystem])
+    val (lines, local) = twoClusters(name)
+    (lines, local, local.map(d => s"countopen://$d"))
+  }
+
+  test("range holds one slice per cluster open and close() releases them") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (lines, local, dirs) = countedClusters("rc")
+    // every cluster spans several shards, so a full scan reads several
+    // slices from each
+    assert(local.forall { d =>
+      val idx = ZipNumIndex.load(d, conf)
+      idx.slices(idx.blocks).size >= 2
+    })
+    CountingOpenFs.reset()
+    val all = ClusterOps.range(spark, None, None, dirs).toSeq
+    assert(all == lines.sorted(KeyOrder))
+    assert(CountingOpenFs.live.get == 0, "exhaustion closes every handle")
+    assert(CountingOpenFs.maxLive.get <= dirs.size,
+      s"${CountingOpenFs.maxLive.get} handles open at once for ${dirs.size} clusters")
+
+    CountingOpenFs.reset()
+    val it = ClusterOps.range(spark, Some("org,s1"), None, dirs)
+    assert(it.take(3).size == 3)
+    assert(CountingOpenFs.live.get == dirs.size)
+    it.close()
+    assert(CountingOpenFs.live.get == 0, "close() releases the open shards")
+    assert(!it.hasNext)
+    it.close() // idempotent
+  }
+
+  test("cluster-range loads each summary once; stderr and stdout as before") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (lines, local, dirs) = countedClusters("ra")
+    val (s, e) = (Some("org,s1)"), Some("org,s2)"))
+    val expectedErr = dirs.map { d =>
+      val idx = ZipNumIndex.load(d, conf)
+      s"$d: ${idx.prune(s, e).size}/${idx.blocks.size} blocks in range"
+    }
+    CountingOpenFs.reset()
+    val out = new java.io.ByteArrayOutputStream
+    val err = new java.io.ByteArrayOutputStream
+    val (sysOut, sysErr) = (System.out, System.err)
+    System.setOut(new java.io.PrintStream(out, true, "UTF-8"))
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try ClusterOps.rangeFromArgs(spark, Array(s.get, e.get) ++ dirs)
+    finally { System.setOut(sysOut); System.setErr(sysErr) }
+    assert(out.toString("UTF-8") ==
+      lines.filter(inRange(s, e)).sorted(KeyOrder).map(_ + "\n").mkString)
+    assert(err.toString("UTF-8").split("\n").toSeq
+      .filter(_.endsWith("blocks in range")) == expectedErr)
+    assert(local.map(d => CountingOpenFs.opens.get(s"$d/ALL.summary")) ==
+      Seq(1, 1), "each ALL.summary is read once")
+    assert(CountingOpenFs.live.get == 0)
   }
 
   test("Boundaries.sample is deterministic; quantiles are sorted distinct") {

@@ -72,15 +72,20 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/sources/zipnum/ZipNumWriter.scala" -> 1,
     "graft/cli/GraftCli.scala" -> 1)
 
-  test("every driver-side collect() site is inventoried with its bound") {
-    val root = Paths.get("/root/repo/src/main/scala")
-    val pattern = "\\.collect\\(\\)".r
-    val found = Files.walk(root).iterator().asScala
+  /** file (relative to src/main/scala) -> number of `pattern` matches, for
+    * every file with at least one. */
+  private def inventory(pattern: scala.util.matching.Regex): Map[String, Int] = {
+    val root = Paths.get("src/main/scala")
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString.replace('\\', '/') ->
         pattern.findAllIn(Files.readString(p)).length)
       .filter(_._2 > 0)
       .toMap
+  }
+
+  test("every driver-side collect() site is inventoried with its bound") {
+    val found = inventory("\\.collect\\(\\)".r)
     val added = (found.keySet -- allowed.keySet).toSeq.sorted
     val removed = (allowed.keySet -- found.keySet).toSeq.sorted
     val changed = allowed.keySet.intersect(found.keySet)
@@ -93,5 +98,18 @@ class CollectAuditSpec extends AnyFunSuite {
         "If the new site's result is small-by-construction, add it " +
         "here WITH its bound; if it is not, it does not belong on " +
         "the driver.")
+  }
+
+  // `toLocalIterator` runs one Spark job per partition and pulls each
+  // partition whole onto the driver; a serving path built on it pays a job
+  // floor per slice (ClusterOps.range reads its slices on the driver
+  // instead). Matches both RDD's parameterless form and Dataset's
+  // `toLocalIterator()`. Expected: no site at all.
+  test("src/main has no toLocalIterator site") {
+    val found = inventory("\\.toLocalIterator\\b".r)
+    assert(found.isEmpty,
+      s"toLocalIterator sites: ${found.toSeq.sorted.mkString(", ")}. " +
+        "Read on the driver directly (ZipNumReader.readSlice) or collect " +
+        "a result that is small by construction.")
   }
 }
